@@ -39,7 +39,15 @@ def entry(spark: SparkSession) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text", "lang"
     )
-    n = docs.count()
+    # doc_url's link targets ((id*2+1) % n, ...) name real pages only if
+    # doc_id is dense 0..n-1
+    ids = docs.agg(
+        F.count("*").alias("n"), F.min("doc_id").alias("lo"),
+        F.max("doc_id").alias("hi"), F.countDistinct("doc_id").alias("k"),
+    ).first()
+    n = ids["n"]
+    if (ids["lo"], ids["hi"], ids["k"]) != (0, n - 1, n):
+        raise ValueError(f"doc_id is not dense 0..{n - 1}: {ids}")
 
     def doc_url(idc):
         # host pool h0..h12 with ids 0 and 1 folded into h0 (the mega host)
@@ -105,21 +113,25 @@ def entry(spark: SparkSession) -> DataFrame:
         S.SEEDS,
     )
 
-    store = SnapshotStore(tempfile.mkdtemp(prefix="sparkcrawl_entry_"))
-    cfg = CrawlConfig(bloom_bits=1 << 20, bloom_shards=4)
-    eng = CrawlEngine(spark, store, pages, page_meta, robots_df, cfg)
-    eng.run(seeds=seeds, max_rounds=2)
-    crawled = store.read(spark, "crawled", S.CRAWLED)
-    return (
-        crawled.groupBy("host")
-        .agg(
-            F.count("*").alias("n_crawled"),
-            F.countDistinct("content_hash").alias("n_unique_content"),
-            F.min("round").alias("first_round"),
-            F.max("round").alias("last_round"),
+    with tempfile.TemporaryDirectory(prefix="sparkcrawl_entry_") as root:
+        store = SnapshotStore(root)
+        eng = CrawlEngine(spark, store, pages, page_meta, robots_df,
+                          CrawlConfig())
+        eng.run(seeds=seeds, max_rounds=2)
+        # the aggregate (<= 13 rows) is materialized before the store it
+        # reads from is removed
+        per_host = (
+            store.read(spark, "crawled", S.CRAWLED)
+            .groupBy("host")
+            .agg(
+                F.count("*").alias("n_crawled"),
+                F.countDistinct("content_hash").alias("n_unique_content"),
+                F.min("round").alias("first_round"),
+                F.max("round").alias("last_round"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .orderBy("host")
-    )
+    return per_host.orderBy("host")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

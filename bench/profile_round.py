@@ -1,6 +1,6 @@
 """Per-phase round profile: run N crawl rounds at a given core count with
 SPARKCRAWL_TIMING=1 and print each round's phase breakdown (materialize /
-seen+seq+writes / bloom_save / commit) — the drill-down tool behind the
+seen+seq+writes / commit) — the drill-down tool behind the
 scaling bench (bench/scaling.py reports only per-round walls).
 
 Usage: python bench/profile_round.py [size] [cores] [rounds]

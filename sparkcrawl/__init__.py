@@ -13,7 +13,7 @@ urlnorm       URL canonicalization (reference port rules, RFC-3986-lite)
 filters       frontier admission filters (length / depth / banned hosts)
 robots        robots.txt rules table + disallow / crawl-delay predicates
 politeness    per-host run-cap selection (priority windows) + delay clocks
-seen          URL-seen set: anti-join + broadcast Bloom prefilter
+seen          URL-seen set: exact anti-join + lazily built Bloom prefilter
 extract       vectorized Arrow UDF: html -> (text, links, lang, title)
 engine        driver fixpoint loop, checkpoint/resume, trace, metrics
 tables        SnapshotTable: atomic-commit Parquet tables (Iceberg stand-in)

@@ -44,12 +44,6 @@ def main(argv: list[str] | None = None) -> None:
              "If-Modified-Since cache; frontier/seen reset from seeds "
              "(304 branch, CrawlerBolt.java:460-485)",
     )
-    ap.add_argument("--no-bloom", action="store_true")
-    ap.add_argument(
-        "--seen-filter", choices=("bloom", "cuckoo"), default="bloom",
-        help="probabilistic seen-prefilter backing the exact anti-join "
-             "(cuckoo = deletable, lower fpp per bit; sparkcrawl/cuckoo.py)",
-    )
     args = ap.parse_args(argv)
 
     # Under spark-submit the master/memory/conf come from the submit
@@ -78,12 +72,7 @@ def main(argv: list[str] | None = None) -> None:
     import os
 
     conf_kw = json.loads(os.environ.get("SPARKCRAWL_CONF", "{}"))
-    conf_kw.update(
-        max_file_num=args.max_docs,
-        max_rounds=args.max_rounds,
-        use_bloom=not args.no_bloom,
-        seen_filter=args.seen_filter,
-    )
+    conf_kw.update(max_file_num=args.max_docs, max_rounds=args.max_rounds)
     cfg = CrawlConfig(**conf_kw)
     eng = CrawlEngine(spark, store, pages, meta, robots, cfg)
     seeds = None

@@ -505,10 +505,10 @@ def dsir_resample(
         + F.lit(0.5)
     ) / F.lit(4294967296.0)
     key = F.col("weight_q").cast("double") / quant - F.log(-F.log(u))
-    # floor(x + 0.5) rather than round(): HALF_UP for every sign in Spark,
-    # DuckDB, and the Python reference alike, so an exact-.5 tie cannot
-    # diverge across the three implementations (round() is HALF_EVEN in
-    # Python, HALF_UP in Spark).
+    # floor(x + 0.5) rather than round(): it rounds half toward +inf
+    # (2.5 -> 3, -2.5 -> -2) identically in Spark, DuckDB, and the Python
+    # reference, so an exact-.5 tie cannot diverge across the three
+    # implementations (round() is HALF_EVEN in Python, HALF_UP in Spark).
     return (
         w.withColumn("key_q", F.floor(key * quant + F.lit(0.5)).cast("long"))
         .select("doc_id", "weight_q", "key_q")

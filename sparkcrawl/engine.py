@@ -23,6 +23,7 @@ all tie-breaks are (parent_seq, link_idx); all UDFs pure.
 
 from __future__ import annotations
 
+import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -30,7 +31,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from sparkcrawl import schema as S
-from sparkcrawl import cuckoo as cuckoomod
 from sparkcrawl import politeness, robots, seen as seenmod
 from sparkcrawl.filters import FilterConfig, admission_predicate
 from sparkcrawl.extract import with_extracted
@@ -38,6 +38,10 @@ from sparkcrawl.tables import SnapshotStore
 from sparkcrawl.urlnorm import canonicalize_udf, with_url_parts
 
 ROUND_SHIFT = 32  # seq = (round << 32) | dense rank within round
+# Snapshot-meta key of the seen prefilter's completeness marker,
+# {"bits": n, "shards": B}: committed by every round that engaged the
+# filter (so ORed its admitted keys in), by no other commit.
+BLOOM_META = "seen_bloom"
 
 
 @dataclass
@@ -65,47 +69,39 @@ class CrawlConfig:
     # full session width (the Iceberg analogue: bucket count is sized to
     # the table, not to the cluster). 0 disables (always session width).
     cache_rows_per_partition: int = 16384
-    # Force-broadcast the host-keyed state tables (robots rules, priority,
-    # delay clocks) — the reference's in-memory robotMap/lastCrawled
-    # analogue, correct while those tables fit executor memory. At 10^8+
-    # robots-bearing hosts set False: the same equi-joins then plan as
-    # shuffled joins on host (identical results, tested).
-    broadcast_host_state: bool = True
-    # Crossover for the broadcast: each F.broadcast build is its own Spark
-    # job (~80-170 ms of pure driver/scheduler latency on this class of
-    # host, x3 host-state joins per round), amortized only when the
-    # frontier side is big enough that shuffling it on host would cost
-    # more. Rounds whose frontier estimate is below this floor take the
-    # shuffled plan (the exchange is then a few-MB narrow-column hop);
-    # at/above it the broadcast ships. Outputs are identical either way
-    # (same equi-joins; e2e-tested) — this only picks the cheaper plan
-    # per regime, exactly like fetch_join="auto".
+    # Host-keyed state joins (robots rules, priority, delay clocks):
+    # broadcast — the reference's in-memory robotMap/lastCrawled analogue —
+    # only when the round's frontier estimate is known and at least this
+    # threshold. Each F.broadcast build is its own Spark job (~80-170 ms of
+    # pure driver/scheduler latency on this class of host, x3 host-state
+    # joins per round), amortized only when the frontier side is big
+    # enough that shuffling it on host would cost more; below it the same
+    # equi-joins plan as shuffled joins on host (the exchange is then a
+    # few-MB narrow-column hop). Past ~10^8 robots-bearing hosts, where
+    # the tables no longer fit executor memory, set it above any frontier
+    # size to keep every round shuffled. Outputs are identical either way
+    # (e2e-tested at 0 and at the default).
     broadcast_min_frontier: int = 1_000_000
-    # Fetch-join strategy for pruning the web table to the selected rows:
-    # "broadcast" ships the selected url_norm keys to every executor (right
-    # for small rounds — one tiny broadcast, web never shuffles);
-    # "bucketed" prunes with a shuffled-hash semi-join against the cached
-    # web's existing hash(url_norm) partitioning (right for BIG rounds —
-    # a 10^6-key selection would be a 100MB serial driver collect+broadcast
-    # per round; the shuffled semi exchanges only the narrow key column and
-    # builds per-partition hash sets, the local analogue of an Iceberg
-    # storage-bucketed join). "auto" picks bucketed when the frontier
-    # estimate clears bucketed_fetch_min AND the round runs at the cached
-    # web's partition width (the co-partitioning precondition — otherwise
-    # the web side would reshuffle, which must never happen).
-    fetch_join: str = "auto"
+    # Fetch join, pruning the web table to the selected rows: a round
+    # ships the selected url_norm keys to every executor as a broadcast
+    # (right for small rounds — one tiny broadcast, web never shuffles)
+    # unless its frontier estimate is at least bucketed_fetch_min AND it
+    # runs at the cached web's partition width (the co-partitioning
+    # precondition — otherwise the web side would reshuffle, which must
+    # never happen). Then it prunes with a shuffled-hash semi-join against
+    # the cached web's existing hash(url_norm) partitioning: a 10^6-key
+    # selection would be a 100MB serial driver collect+broadcast per
+    # round, while the shuffled semi exchanges only the narrow key column
+    # and builds per-partition hash sets — the local analogue of an
+    # Iceberg storage-bucketed join.
     bucketed_fetch_min: int = 200_000
-    # Frontier write discipline. "delta" (default): a round APPENDS the
-    # admitted rows and the selected keys (merge-on-read tombstones,
-    # `frontier_consumed` table); the live frontier = data dirs anti-join
-    # tombstones, and a threshold-triggered compaction folds tombstones
-    # back into one base (engine._compact_frontier). Per-round frontier
-    # write cost is O(round), not O(frontier) — at a 10^10-URL frontier
-    # the "rewrite" mode's full leftover∪admitted overwrite would dwarf
-    # the round's own compute. Iceberg analogue: MERGE with position
+    # The frontier is merge-on-read: a round APPENDS the admitted rows and
+    # the selected keys (tombstones, `frontier_consumed` table); the live
+    # frontier = data dirs anti-join tombstones, and a threshold-triggered
+    # compaction folds tombstones back into one base
+    # (engine._compact_frontier). Per-round frontier write cost is
+    # O(round), not O(frontier). Iceberg analogue: MERGE with position
     # deletes + periodic rewrite_position_delete_files/rewrite_data_files.
-    # "rewrite": full overwrite per round (simpler; fine while small).
-    frontier_mode: str = "delta"
     # Compact when tombstones exceed max(live frontier size, this floor):
     # read amplification stays ≤2× and each compaction is a full consumed-
     # growth apart — amortized O(round size) per round.
@@ -120,30 +116,25 @@ class CrawlConfig:
     # the rewrite over enough appended dirs to be worth it; tests shrink it
     # to exercise maintenance inside short crawls.
     maintenance_every: int = 64
-    use_bloom: bool = True
-    # Which probabilistic seen-prefilter backs the exact anti-join (the
-    # north-rule's "bloom/cuckoo URL-seen"): "bloom" (seen.BloomState,
-    # default) or "cuckoo" (cuckoo.CuckooState — deletable, ~60x lower fpp
-    # at the same bit budget; see sparkcrawl/cuckoo.py). Exactness never
-    # depends on the choice (tested identical to use_bloom=False).
-    seen_filter: str = "bloom"
-    # Crossover for the PREFILTER stage (never the filter's contents): the
-    # membership pandas_udf adds a fixed ~100-150 ms ArrowEvalPython stage
-    # to the round's critical path, which only pays once the seen table is
-    # big enough that the exact anti-join's scan of it dominates. Below
-    # this floor the round runs the pure exact anti-join (no Python
-    # stage); the filter still absorbs every round's admitted keys (the
-    # add rides the concurrent stage-writes phase), so it is complete —
-    # with zero false negatives — the moment the threshold engages.
-    # Exactness never depends on the choice (the bloom is a prefilter in
-    # front of the same exact anti-join; e2e-tested identical).
+    # Crossover for the seen PREFILTER (seen.BloomFileState in front of the
+    # exact anti-join): its membership pandas_udf adds a fixed ~100-150 ms
+    # ArrowEvalPython stage to the round's critical path, which can only
+    # pay once the seen table is big enough that the exact anti-join's
+    # scan of it dominates. Below this seen size no filter work runs at
+    # all; the first round at or above it builds the filter from the seen
+    # table, and every later round ORs in its admitted keys. Exactness
+    # never depends on it (e2e-tested identical across engagement, resume
+    # and recrawl). Set it above any seen size to keep the prefilter off.
     bloom_filter_min_seen: int = 1_000_000
-    bloom_bits: int = 1 << 23  # ~1M urls at 8 bits/key locally
-    # Bloom shard count B: shard = pmod(url_hash, B), one persisted file
-    # per shard (seen.BloomState). At 10^10 URLs the ~12 GB bitmap ships
-    # as B slices co-partitioned with the seen table's bucket(url_hash)
-    # layout so each executor loads only its buckets' shards; locally the
-    # same addressing runs with all shards resident.
+    # Filter size: 2^23 bits hold ~1M keys at 8 bits/key — exactly the
+    # default crossover. At k=7 the false-positive rate is ~2% at 1M keys
+    # and ~23% at 2M, so scale it with the expected seen size.
+    bloom_bits: int = 1 << 23
+    # Bloom shard count B: shard = url_hash mod B, one file per shard. At
+    # 10^10 URLs the ~12 GB bitmap ships as B slices co-partitioned with
+    # the seen table's bucket(url_hash) layout so each executor loads only
+    # its buckets' shards; locally the same addressing runs with all
+    # shards resident.
     bloom_shards: int = 8
     # Local-variant politeness (CrawlerBolt.java:442-444 intent): hosts
     # whose effective robots block is agent-specific but has no explicit
@@ -327,8 +318,6 @@ class _Ticker:
     extra barriers cost pipeline overlap."""
 
     def __init__(self):
-        import os
-
         lvl = os.environ.get("SPARKCRAWL_TIMING", "0")
         self.on = lvl in ("1", "2")
         self.deep = lvl == "2"
@@ -433,79 +422,33 @@ class CrawlEngine:
             rb, cfg.agent, with_agent_flag=True
         ).cache()
         self.host_rules.count()
-        self._bloom = None  # BloomState | CuckooState (duck-typed)
+        self._bloom: seenmod.BloomFileState | None = None
 
-    # ---- incremental seen-Bloom (see seen.BloomState scale notes) ----
+    # ---- the seen prefilter, built on first engagement ----
 
-    def _filter_kind(self) -> str:
-        # resume reads the kind from the snapshot meta so a store written
-        # with either filter reopens with the right decoder
-        return str(self.store.meta.get("seen_filter", self.cfg.seen_filter))
-
-    def _new_seen_filter(self):
-        """A FRESH (empty) seen filter. File-backed by default: per-shard
-        state lives only as files under the store root and every per-round
-        merge runs executor-side (seen.BloomFileState / cuckoo
-        .CuckooFileState) — the driver never holds a bitmap, removing the
-        last driver-centralized hop in the loop at 10^10-URL scale. The
-        single-shard Bloom keeps the legacy driver-resident state (its flat
-        bloom.bin layout predates the shard files)."""
-        kind = self.cfg.seen_filter
-        path = self._bloom_path(kind)
-        if kind == "cuckoo":
-            return cuckoomod.CuckooFileState.create(
-                path, self.cfg.bloom_bits, self.cfg.bloom_shards
-            )
-        if self.cfg.bloom_shards > 1:
-            return seenmod.BloomFileState.create(
-                path, self.cfg.bloom_bits, self.cfg.bloom_shards
-            )
-        return seenmod.BloomState(self.cfg.bloom_bits, self.cfg.bloom_shards)
-
-    def _bloom_path(self, kind: str | None = None) -> str:
-        import os
-
-        if (kind or self._filter_kind()) == "cuckoo":
-            return os.path.join(self.store.root, "cuckoo")
-        # sharded layout is a directory of per-shard files; the single-
-        # shard legacy layout stays a flat file (resume-compatible)
-        shards = int(
-            self.store.meta.get("bloom_shards", self.cfg.bloom_shards)
-        )
-        name = "bloom" if shards > 1 else "bloom.bin"
-        return os.path.join(self.store.root, name)
-
-    def bloom(self):
-        """The active seen-prefilter state (Bloom or cuckoo — duck-typed)."""
-        import os
-
-        if self._bloom is not None:
-            return self._bloom
-        path = self._bloom_path()
-        n_bits = int(self.store.meta.get("bloom_bits", self.cfg.bloom_bits))
-        n_shards = int(self.store.meta.get("bloom_shards", 1))
-        if self._filter_kind() == "cuckoo":
-            cls = cuckoomod.CuckooFileState
-        elif os.path.isdir(path):
-            cls = seenmod.BloomFileState  # sharded dir layout
-        else:
-            cls = seenmod.BloomState  # legacy flat bloom.bin
-        if os.path.exists(path) and self.store.committed_round >= 0:
-            self._bloom = cls.load(path, n_bits, n_shards)
-        else:
-            # resume without a persisted filter: rebuild once from seen
-            self._bloom = self._new_seen_filter()
-            if self.store.exists("seen"):
+    def bloom(self) -> seenmod.BloomFileState:
+        """The seen prefilter (cfg.bloom_filter_min_seen). Opens the filter
+        persisted under ``<store>/bloom`` when the snapshot meta carries the
+        completeness marker (BLOOM_META: only a round that ORed its admitted
+        keys in commits it); otherwise rebuilds it from the seen table. A
+        filter the shard merges made a superset of the committed seen set
+        (a round killed before its commit) is safe: extra bits only send
+        candidates to the exact anti-join."""
+        if self._bloom is None:
+            path = os.path.join(self.store.root, "bloom")
+            mark = self.store.meta.get(BLOOM_META)
+            if mark and os.path.isdir(path):
+                self._bloom = seenmod.BloomFileState.load(
+                    path, int(mark["bits"]), int(mark["shards"])
+                )
+            else:
+                self._bloom = seenmod.BloomFileState.create(
+                    path, self.cfg.bloom_bits, self.cfg.bloom_shards
+                )
                 self._bloom.add_hashes_df(
                     self.store.read(self.spark, "seen", S.SEEN)
                 )
         return self._bloom
-
-    def _save_bloom(self) -> None:
-        # a superset bitmap is always safe (extra bits only cost exact-join
-        # checks), so overwriting before the snapshot commit is crash-safe
-        if self._bloom is not None:
-            self._bloom.save(self._bloom_path())
 
     # ---- bootstrap ----
 
@@ -563,16 +506,10 @@ class CrawlEngine:
         self.store.stage_append("seen", seen)
         self.store.stage_overwrite("host_priority", host_priority)
         self.store.stage_overwrite("host_clock", _empty(self.spark, S.HOST_CLOCK))
-        if self.cfg.use_bloom:
-            self._bloom = self._new_seen_filter()
-            self._bloom.add_hashes_df(seen)
-            self._save_bloom()
         seen.unpersist()
         self.store.commit(
             {"round": 0, "n_crawled": 0, "n_frontier": n_seeds,
-             "n_seen": n_seeds, "bloom_bits": self.cfg.bloom_bits,
-             "bloom_shards": self.cfg.bloom_shards,
-             "seen_filter": self.cfg.seen_filter}
+             "n_seen": n_seeds}
         )
 
     def init_recrawl(self, seeds: DataFrame) -> None:
@@ -624,17 +561,13 @@ class CrawlEngine:
         store.stage_overwrite("trace", _empty(spark, S.TRACE))
         store.stage_overwrite("metrics", _empty(spark, S.METRICS))
         store.stage_overwrite("lineage", _empty(spark, S.LINEAGE))
-        if self.cfg.use_bloom:
-            self._bloom = self._new_seen_filter()
-            self._bloom.add_hashes_df(seen)
-            self._save_bloom()
         seen.unpersist()
+        # the reset seen table invalidates any filter: the pass's first
+        # engaged round rebuilds it (its meta carries no BLOOM_META)
+        self._bloom = None
         self.store.commit(
             {"round": 0, "pass": int(self.store.meta.get("pass", 1)) + 1,
-             "n_crawled": 0, "n_frontier": n_seeds, "n_seen": n_seeds,
-             "bloom_bits": self.cfg.bloom_bits,
-             "bloom_shards": self.cfg.bloom_shards,
-             "seen_filter": self.cfg.seen_filter}
+             "n_crawled": 0, "n_frontier": n_seeds, "n_seen": n_seeds}
         )
 
     # ---- one round ----
@@ -662,24 +595,19 @@ class CrawlEngine:
             self.spark.conf.set("spark.sql.shuffle.partitions", str(cur))
 
     def _use_bucketed_fetch(self, frontier_est) -> bool:
-        """Bucketed (shuffled-hash) fetch prune iff: configured, the
-        frontier estimate clears the threshold (a selection that big would
-        make the broadcast a serial driver round-trip), AND this round's
-        shuffle width equals the cached web's partition width so the web
-        side reuses its partitioning with NO exchange (plan-guarded)."""
-        if self.cfg.fetch_join == "broadcast" or not self.cfg.cache_web:
-            return False  # without the cache there is no partitioning to
-            # reuse — a shuffled prune would exchange the html payload
-        width_ok = (
-            int(self.spark.conf.get("spark.sql.shuffle.partitions", "0"))
-            == self._cache_width
-        )
-        if self.cfg.fetch_join == "bucketed":
-            return width_ok
+        """Bucketed (shuffled-hash) fetch prune iff: the web is cached, the
+        frontier estimate clears cfg.bucketed_fetch_min (a selection that
+        big would make the broadcast a serial driver round-trip), AND this
+        round's shuffle width equals the cached web's partition width so
+        the web side reuses its partitioning with NO exchange
+        (plan-guarded). Without the cache there is no partitioning to
+        reuse — a shuffled prune would exchange the html payload."""
         return (
-            width_ok
+            self.cfg.cache_web
             and frontier_est is not None
             and int(frontier_est) >= self.cfg.bucketed_fetch_min
+            and int(self.spark.conf.get("spark.sql.shuffle.partitions", "0"))
+            == self._cache_width
         )
 
     def _shuffle_target(self, est, ceiling: int | None = None) -> int:
@@ -703,10 +631,9 @@ class CrawlEngine:
         # Round scalars ride a broadcast one-row column (p_round), never a
         # scalar literal: inlined int literals defeat the whole-stage-codegen
         # cache, recompiling ~185 stages every round (see round_params).
-        # frontier_raw (no p_round) feeds the rewrite-mode leftover so the
-        # persisted frontier schema is unchanged.
-        frontier_raw = self._read_frontier()
-        frontier = with_round(frontier_raw, round_params(spark, round_no))
+        frontier = with_round(
+            self._read_frontier(), round_params(spark, round_no)
+        )
         seen = store.read(spark, "seen", S.SEEN)
         content_seen = store.read(spark, "content_seen", S.CONTENT_SEEN)
         host_clock = store.read(spark, "host_clock", S.HOST_CLOCK)
@@ -723,9 +650,7 @@ class CrawlEngine:
         # cfg.broadcast_min_frontier): broadcast only when the frontier is
         # big enough to amortize the per-round broadcast-build jobs
         fe = prev_meta.get("n_frontier")
-        host_bc = cfg.broadcast_host_state and (
-            fe is None or int(fe) >= cfg.broadcast_min_frontier
-        )
+        host_bc = fe is not None and int(fe) >= cfg.broadcast_min_frontier
         eligible = politeness.eligible_hosts_filter(
             frontier, self.host_rules, host_clock, round_no,
             hint_broadcast=host_bc,
@@ -767,11 +692,11 @@ class CrawlEngine:
         # sort wholesale: a KEY-ONLY semi-join prunes the cached web scan
         # to the selected rows (one streaming pass over the cache, no
         # sort), then the outer join runs on the pruned (≤ selection-sized)
-        # side. The key side ships two ways (cfg.fetch_join): broadcast
-        # for small rounds, or a shuffled-hash semi against the cache's
-        # hash(url_norm) partitioning for big rounds — exchanging only the
-        # narrow key column, never collecting 10^6 keys through the
-        # driver. At 10^10 scale the latter IS the Iceberg
+        # side. The key side ships two ways (cfg.bucketed_fetch_min):
+        # broadcast for small rounds, or a shuffled-hash semi against the
+        # cache's hash(url_norm) partitioning for big rounds — exchanging
+        # only the narrow key column, never collecting 10^6 keys through
+        # the driver. At 10^10 scale the latter IS the Iceberg
         # storage-bucketed join on bucket(url) (ARCHITECTURE.md §4).
         bucketed = self._use_bucketed_fetch(prev_meta.get("n_frontier"))
         if bucketed:
@@ -881,12 +806,6 @@ class CrawlEngine:
         )
         fx = tk.barrier("fetch+extract", fx)
 
-        delta = cfg.frontier_mode == "delta"
-        if not delta:
-            leftover = frontier_raw.join(
-                selected.select("url_norm"), "url_norm", "left_anti"
-            )
-
         # content dedup + lang filter on GETs
         fetchable = fx.filter(fetch_mask)
         gets = (
@@ -962,19 +881,19 @@ class CrawlEngine:
             .drop("_rn")
         )
 
-        # 8. seen anti-join (incremental-Bloom-prefiltered) + deterministic seq
+        # 8. seen anti-join (Bloom-prefiltered past the crossover) +
+        # deterministic seq
         cand = tk.barrier("links+canon", cand)
         # The anti-join itself sits INSIDE the round's materialization
         # barrier and is pinned once: dense_seq's range-sampling pass and
-        # rank exchange would otherwise each re-execute the Bloom prefilter
+        # rank exchange would otherwise each re-execute the prefilter
         # + exact anti-join against the (ever-growing) seen table — the
         # dominant re-computed slice of the per-round fixed cost.
-        # the prefilter engages only past the seen-size crossover (see
-        # cfg.bloom_filter_min_seen) — below it the round runs the pure
-        # exact anti-join, skipping the fixed-cost membership UDF stage.
-        # The filter's CONTENTS stay complete either way (adds run every
-        # round in the stage-writes phase), so engaging it later is safe.
-        bloom_on = cfg.use_bloom and (
+        # The prefilter engages only past the seen-size crossover (see
+        # cfg.bloom_filter_min_seen); below it the round runs the pure
+        # exact anti-join and no filter work at all. The first engaged
+        # round builds the filter from seen (self.bloom()).
+        bloom_on = (
             int(prev_meta.get("n_seen", 0)) >= cfg.bloom_filter_min_seen
         )
         if bloom_on:
@@ -1072,16 +991,15 @@ class CrawlEngine:
                 cex.submit(store.stage_overwrite, "host_clock", new_clock),
                 cex.submit(store.stage_append, "lineage", lineage),
             ]
-            if delta:
-                # O(round) frontier maintenance: append the selected keys
-                # as tombstones (merge-on-read); admitted rows follow once
-                # dense_seq assigns their seq. The base is never rewritten.
-                write_futs.append(
-                    cex.submit(
-                        store.stage_append, "frontier_consumed",
-                        selected.select("url_norm"),
-                    )
+            # O(round) frontier maintenance: append the selected keys as
+            # tombstones (merge-on-read); admitted rows follow once
+            # dense_seq assigns their seq. The base is never rewritten.
+            write_futs.append(
+                cex.submit(
+                    store.stage_append, "frontier_consumed",
+                    selected.select("url_norm"),
                 )
+            )
             # dense_seq's offset prefix sum doubles as the admitted count —
             # no separate count() job. size_bound = the exact new-row count
             # from the barrier, so small rounds collapse to one partition.
@@ -1100,31 +1018,15 @@ class CrawlEngine:
                 F.xxhash64("url_norm").alias("url_hash"),
                 F.col("p_round").alias("round_added"),
             )
-            if delta:
-                write_futs.append(
-                    cex.submit(
-                        store.stage_append, "frontier", new_frontier_rows
-                    )
-                )
-            else:
-                write_futs.append(
-                    cex.submit(
-                        store.stage_overwrite, "frontier",
-                        leftover.unionByName(new_frontier_rows),
-                    )
-                )
-                if store.exists("frontier_consumed"):
-                    # resuming a delta store in rewrite mode: leftover
-                    # already honored the tombstones (it came from
-                    # _read_frontier), so the overwrite folds them in —
-                    # drop the now-stale table
-                    store.stage_drop("frontier_consumed")
+            write_futs.append(
+                cex.submit(store.stage_append, "frontier", new_frontier_rows)
+            )
             write_futs.append(
                 cex.submit(store.stage_append, "seen", new_seen)
             )
-            if cfg.use_bloom:
+            if bloom_on:
                 write_futs.append(
-                    cex.submit(self.bloom().add_hashes_df, new_seen)
+                    cex.submit(self._bloom.add_hashes_df, new_seen)
                 )
             counts: dict[str, int] = {}
             pid_counts: dict[int, int] = {}
@@ -1167,7 +1069,7 @@ class CrawlEngine:
             )
             meta = dict(prev_meta)
             meta["round"] = round_no
-            store.commit(meta)
+            store.commit(self._mark_bloom(meta, bloom_on))
             _free_scratch(scratch)
             return {"n_selected": 0, "n_admitted": 0, "n_fetched": 0,
                     "n_frontier": int(meta.get("n_frontier", 0))}
@@ -1175,9 +1077,6 @@ class CrawlEngine:
         n_dup = counts.get("dup_content", 0)
         n_get = n_fetched + n_dup + counts.get("not_html_lang", 0)
         n_denied = counts.get("robots_denied", 0)
-        if cfg.use_bloom:
-            self._save_bloom()
-        tk("bloom_save")
 
         wall_ms = int((time.time() - t0) * 1000)
         store.stage_append_rows(
@@ -1196,21 +1095,13 @@ class CrawlEngine:
             "n_crawled": total,
             "n_frontier": n_frontier,
             "n_seen": n_seen,
-            "bloom_bits": prev_meta.get("bloom_bits", cfg.bloom_bits),
-            "bloom_shards": prev_meta.get("bloom_shards", 1),
-            "seen_filter": prev_meta.get("seen_filter", cfg.seen_filter),
-        }
-        if delta:
-            meta["n_frontier_consumed"] = (
+            "n_frontier_consumed": (
                 int(prev_meta.get("n_frontier_consumed", 0)) + n_selected
-            )
-        elif "n_frontier_consumed" in prev_meta:
-            # rewrite mode folded any inherited tombstones into the
-            # overwrite this round (leftover came from _read_frontier)
-            meta["n_frontier_consumed"] = 0
+            ),
+        }
         if "pass" in prev_meta:
             meta["pass"] = prev_meta["pass"]
-        store.commit(meta)
+        store.commit(self._mark_bloom(meta, bloom_on))
         _free_scratch(scratch)
         tk("commit")
         out = {
@@ -1222,10 +1113,19 @@ class CrawlEngine:
             out["timings"] = tk.phases
         return out
 
+    def _mark_bloom(self, meta: dict, bloom_on: bool) -> dict:
+        """``meta`` with the filter's completeness marker iff this round
+        engaged the filter (and so ORed its admitted keys in). A round
+        that did not leaves the filter behind the seen table, so the
+        next engagement must rebuild it (self.bloom())."""
+        meta.pop(BLOOM_META, None)
+        if bloom_on:
+            meta[BLOOM_META] = {"bits": self._bloom.n_bits,
+                                "shards": self._bloom.shards}
+        return meta
+
     def _read_frontier(self) -> DataFrame:
-        """The LIVE frontier: data dirs minus merge-on-read tombstones.
-        Honors tombstones whenever the store has them (independent of this
-        engine's cfg.frontier_mode, so any engine can resume any store)."""
+        """The LIVE frontier: data dirs minus merge-on-read tombstones."""
         f = self.store.read(self.spark, "frontier", S.FRONTIER)
         if self.store.exists("frontier_consumed"):
             cons = self.store.read(

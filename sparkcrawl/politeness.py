@@ -18,10 +18,12 @@ Scale notes:
     top-k: phase 1 ranks within (host, salt) — 64-way split of each host —
     keeping ≤cap rows per split; phase 2 ranks the ≤64·cap survivors per
     host. The mega-host's sort shrinks from O(backlog) to O(64·cap).
-  * cap/priority is a broadcast join while host_priority fits executor
-    memory; past that (hint_broadcast=False, CrawlConfig
-    .broadcast_host_state) every host-keyed join here plans as a shuffled
-    equi-join co-partitioned with the frontier.
+  * cap/priority is a broadcast join only on rounds whose frontier is
+    big enough to amortize the broadcast build (hint_broadcast, from
+    CrawlConfig.broadcast_min_frontier); otherwise — and at any size past
+    ~10^8 hosts, where the threshold is set above every frontier — each
+    host-keyed join here plans as a shuffled equi-join co-partitioned with
+    the frontier.
 """
 
 from __future__ import annotations

@@ -4200,8 +4200,8 @@ FROM tc ORDER BY doc_id
 # the FIRST 50 entries against the DuckDB oracle.  Round 4 rotated the 34
 # never-driver-checked names to the front (all 50 passed); that left the 33
 # names last checked in CORRECTNESS_r03 un-re-checked after round 4's
-# shared-machinery changes (adaptive shuffle sizing, cuckoo driver-path
-# retirement).  Round 5 therefore fronts those 33 (block A, slots 1-33) and
+# shared-machinery changes (adaptive shuffle sizing, moving the seen
+# filters' merges off the driver).  Round 5 therefore fronts those 33 (block A, slots 1-33) and
 # keeps the most load-bearing crawl-path names — plus the two ops whose
 # implementations round 5 touches (windowed_lsh_pairs state cap,
 # dsir_resample tie-stable quantization) — in slots 34-50 (block B), so

@@ -1,22 +1,35 @@
-"""URL-seen set: exact anti-join with a broadcast Bloom prefilter.
+"""URL-seen set: exact anti-join, with a lazily built Bloom prefilter.
 
 Reference D4 is a transactional get-or-put into BerkeleyDB per URL
 (URLFilterBolt.java:107-120, StorageServer.java:107-134). The batch
 equivalent is a left-anti join of candidate links against the ``seen`` table,
-plus within-batch dropDuplicates. At 10^10-URL scale the anti-join shuffles
-every candidate; the Bloom prefilter (built once per round from the seen
-side, broadcast to executors) short-circuits the common case: a candidate
-whose hash MISSES the filter is definitely new and skips the join entirely;
-only hits (true dups + ~1% false positives) flow into the exact anti-join.
-Exactness therefore never depends on the Bloom (test: on/off identical).
+plus within-batch dropDuplicates (``anti_join_seen``).
 
-The filter is a numpy bitmap built with k-fold double hashing
-(Kirsch–Mitzenmacher: idx_i = h1 + i*h2 mod m) over the xxhash64 url_hash
-that the seen table already stores; membership is checked in a vectorized
-Arrow-batched pandas UDF.
+Past the engine's seen-size crossover (CrawlConfig.bloom_filter_min_seen) a
+Bloom filter over the seen table's url_hash column sits in front of that
+join (``anti_join_with_bloom``): a candidate whose hash MISSES the filter is
+definitely new and skips the join; hits (true dups plus false positives)
+flow into the exact anti-join. Only the definitely-new candidates are
+diverted — on the benchmark workloads ``seen.admit_per_link`` is 0.61
+(crawl-narrow) and 0.39 (crawl-wide), so most candidates are dups that
+still reach the join — and the exact join still reads ALL of ``seen``.
+Exactness therefore never depends on the filter (tests: thresholds on/off
+identical to the oracle).
+
+The filter (``BloomFileState``) is sharded by url_hash mod B, lives only as
+one file per shard, and every merge runs inside an executor task: the
+driver never holds a bitmap. The engine builds it from ``seen`` the first
+time a round engages it and from then on ORs in each round's admitted
+hashes; below the crossover no filter work runs at all. Bits are set with
+k-fold double hashing (Kirsch–Mitzenmacher: idx_i = h1 + i*h2 mod m) over the
+xxhash64 url_hash that the seen table already stores; membership is checked
+in a vectorized Arrow-batched pandas UDF.
 """
 
 from __future__ import annotations
+
+import os
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -46,26 +59,27 @@ def _indices(hashes: np.ndarray, n_bits: int) -> np.ndarray:
         )
 
 
-def _sharded_indices(hashes: np.ndarray, shards: int,
-                     shard_bits: int) -> np.ndarray:
-    """(n,) hashes -> (k, n) bit indices into the CONCATENATED shard
-    bitmaps: shard = url_hash mod B (the pmod(url_hash, B) bucketing the
-    Iceberg seen table co-partitions on), bit = shard*shard_bits +
-    k-fold index within the shard's slice. shards=1 degenerates to
-    _indices exactly."""
-    if shards == 1:
-        return _indices(hashes, shard_bits)
-    s = (hashes.astype(np.uint64) % np.uint64(shards)).astype(np.int64)
-    return _indices(hashes, shard_bits) + s[None, :] * shard_bits
+def _set_bits(bitmap: np.ndarray, hashes: np.ndarray, n_bits: int) -> None:
+    """OR the k bits of every hash into ``bitmap`` in place."""
+    idx = _indices(hashes, n_bits).ravel()
+    np.bitwise_or.at(bitmap, idx >> 3, (1 << (idx & 7)).astype(np.uint8))
 
 
-def _partition_bitmaps(df: DataFrame, shards: int, shard_bits: int,
-                       n_bytes: int) -> DataFrame:
-    """mapInPandas: one binary bitmap row per non-empty input partition —
-    the Arrow-batched replacement for the old per-row RDD-pickle aggregate
-    (at 10^6-URL rounds the pickle path was a measurable hot-loop cost).
-    Each task ORs its whole partition into a local numpy bitmap in a few
-    vectorized passes; only the (n_bytes)-sized bitmaps leave the executor."""
+def _all_bits(bitmap: np.ndarray, hashes: np.ndarray,
+              n_bits: int) -> np.ndarray:
+    """(n,) bool: every one of a hash's k bits is set in ``bitmap``."""
+    idx = _indices(hashes, n_bits)
+    return ((bitmap[idx >> 3] >> (idx & 7).astype(np.uint8)) & 1).all(axis=0)
+
+
+# ---- one-shot filter for anti_join_seen --------------------------------------
+
+
+def _partition_bitmaps(df: DataFrame, n_bits: int) -> DataFrame:
+    """mapInPandas: one binary bitmap row per non-empty input partition.
+    Each task ORs its whole partition into a local numpy bitmap; only the
+    bitmaps leave the executor."""
+    n_bytes = (n_bits + 7) // 8
 
     def gen(batches):
         acc = None
@@ -74,32 +88,20 @@ def _partition_bitmaps(df: DataFrame, shards: int, shard_bits: int,
             if hs.size:
                 if acc is None:
                     acc = np.zeros(n_bytes, dtype=np.uint8)
-                idx = _sharded_indices(hs, shards, shard_bits).ravel()
-                np.bitwise_or.at(
-                    acc, idx >> 3, (1 << (idx & 7)).astype(np.uint8)
-                )
+                _set_bits(acc, hs, n_bits)
         if acc is not None:
             yield pd.DataFrame({"bm": [acc.tobytes()]})
 
     return df.select("url_hash").mapInPandas(gen, "bm binary")
 
 
-def _or_collect(bitmaps: DataFrame, n_bytes: int) -> np.ndarray:
-    """Collect per-partition bitmaps and OR them on the driver. Only the
-    DRIVER-RESIDENT states use this (the one-shot anti_join_seen query path
-    and the legacy single-shard BloomState); the engine's default filter is
-    BloomFileState, whose merges run executor-side with no driver OR."""
-    acc = np.zeros(n_bytes, dtype=np.uint8)
-    for r in bitmaps.collect():
-        np.bitwise_or(acc, np.frombuffer(r["bm"], dtype=np.uint8), out=acc)
-    return acc
-
-
 def build_bloom(seen: DataFrame, n_bits: int) -> bytes:
-    """OR-reduce per-partition bitmaps of the seen table's url_hash column."""
-    n_bytes = (n_bits + 7) // 8
-    bm = _or_collect(_partition_bitmaps(seen, 1, n_bits, n_bytes), n_bytes)
-    return bm.tobytes()
+    """OR-reduce per-partition bitmaps of the seen table's url_hash column
+    on the driver (the one-shot path; the engine's filter never does)."""
+    acc = np.zeros((n_bits + 7) // 8, dtype=np.uint8)
+    for r in _partition_bitmaps(seen, n_bits).collect():
+        np.bitwise_or(acc, np.frombuffer(r["bm"], dtype=np.uint8), out=acc)
+    return acc.tobytes()
 
 
 def bloom_hit_udf(bitmap: bytes, n_bits: int):
@@ -108,157 +110,46 @@ def bloom_hit_udf(bitmap: bytes, n_bits: int):
 
     @pandas_udf("boolean")
     def _hit(h: pd.Series) -> pd.Series:
-        hv = h.to_numpy(dtype=np.int64)
-        idx = _indices(hv, n_bits)
-        bits = (arr[idx >> 3] >> (idx & 7).astype(np.uint8)) & 1
-        return pd.Series(bits.all(axis=0).astype(bool))
+        return pd.Series(_all_bits(arr, h.to_numpy(dtype=np.int64), n_bits))
 
     return _hit
 
 
-class BloomState:
-    """Incrementally-maintained DRIVER-RESIDENT Bloom filter over seen
-    url_hashes, SHARDED by pmod(url_hash, B). The engine only uses this for
-    the legacy single-shard (flat bloom.bin) layout; sharded stores use
-    BloomFileState below, which shares this class's exact file layout and
-    bit addressing but merges executor-side. Kept as the in-memory kernel
-    and unit-test surface.
-
-    The engine ORs each round's ADMITTED hashes into the bitmap (one
-    vectorized pass over the small delta), instead of rebuilding from the
-    full seen table every round. Persisted alongside the snapshot for
-    resume (one file per shard); rebuilt from the seen table if missing.
-
-    Scale note: at 10^10 URLs a single broadcast bitmap is ~12 GB — too
-    big for one executor. The shard layout fixes that: shard =
-    pmod(url_hash, B), co-partitioned with the Iceberg seen table's
-    bucket(url_hash) layout, so each executor loads only the slices for
-    the url-hash buckets it processes, and each shard persists/loads as
-    its own file (load_shard). Locally all B slices live in one process
-    (the bitmap array is the concatenation of the shard slices), but
-    every code path — indexing, add, membership, save/load — goes through
-    the per-shard addressing, so nothing changes at 10^10 except which
-    subset of files an executor opens.
-    """
-
-    def __init__(self, n_bits: int = 1 << 23, shards: int = 1):
-        assert n_bits % (shards * 8) == 0, "shards must byte-align the bitmap"
-        self.n_bits = n_bits
-        self.shards = shards
-        self.shard_bits = n_bits // shards
-        self.bitmap = np.zeros(n_bits // 8, dtype=np.uint8)
-
-    def add_hashes_df(self, df: DataFrame) -> None:
-        """OR the url_hash column of df into the bitmap (Arrow-batched
-        per-partition vectorized bitmaps, OR-reduced — _partition_bitmaps)."""
-        n_bytes = self.n_bits // 8
-        delta = _or_collect(
-            _partition_bitmaps(df, self.shards, self.shard_bits, n_bytes),
-            n_bytes,
-        )
-        np.bitwise_or(self.bitmap, delta, out=self.bitmap)
-
-    def hit_udf(self):
-        bitmap, shards, shard_bits = (
-            self.bitmap.tobytes(), self.shards, self.shard_bits
-        )
-        arr = np.frombuffer(bitmap, dtype=np.uint8)
-
-        @pandas_udf("boolean")
-        def _hit(h: pd.Series) -> pd.Series:
-            hv = h.to_numpy(dtype=np.int64)
-            idx = _sharded_indices(hv, shards, shard_bits)
-            bits = (arr[idx >> 3] >> (idx & 7).astype(np.uint8)) & 1
-            return pd.Series(bits.all(axis=0).astype(bool))
-
-        return _hit
-
-    # ---- persistence: one immutable file per shard ----
-
-    def _shard_slice(self, s: int) -> np.ndarray:
-        nb = self.shard_bits // 8
-        return self.bitmap[s * nb:(s + 1) * nb]
-
-    def save(self, path: str) -> None:
-        if self.shards == 1:
-            with open(path, "wb") as f:
-                f.write(self.bitmap.tobytes())
-            return
-        import os
-
-        os.makedirs(path, exist_ok=True)
-        for s in range(self.shards):
-            with open(os.path.join(path, f"shard-{s:04d}.bin"), "wb") as f:
-                f.write(self._shard_slice(s).tobytes())
-
-    @staticmethod
-    def load_shard(path: str, s: int) -> np.ndarray:
-        """Read ONE shard's bitmap — the executor-side load unit at scale."""
-        import os
-
-        return np.fromfile(
-            os.path.join(path, f"shard-{s:04d}.bin"), dtype=np.uint8
-        )
-
-    @classmethod
-    def load(cls, path: str, n_bits: int, shards: int = 1) -> "BloomState":
-        b = cls(n_bits, shards)
-        if shards == 1:
-            arr = np.fromfile(path, dtype=np.uint8)
-            assert arr.size == b.bitmap.size, "bloom size mismatch"
-            b.bitmap = arr
-            return b
-        nb = b.shard_bits // 8
-        for s in range(shards):
-            arr = cls.load_shard(path, s)
-            assert arr.size == nb, f"bloom shard {s} size mismatch"
-            b.bitmap[s * nb:(s + 1) * nb] = arr
-        return b
-
-
-# ---- executor-side sharded filter maintenance ------------------------------
+# ---- the engine's filter: sharded, file-backed, merged executor-side --------
 #
-# The engine's default seen-filter path. BloomState above keeps the bitmap on
-# the DRIVER and funnels every per-round delta through a collect+OR hop — the
-# last driver-centralized step in the loop at 10^10-URL scale. The file-backed
-# state below removes it: the filter lives ONLY as one immutable file per
-# shard (shard = url_hash mod B, the same addressing/bit layout as BloomState,
-# so stores persisted by either are interchangeable); each round's delta is
-# grouped by shard and every shard's merge (read slice -> OR delta -> atomic
-# replace) runs INSIDE its executor task. The driver never materializes a
-# bitmap — it only bumps a version token. Membership (hit_udf) lazy-loads
-# exactly the shard slices a task's rows touch, memoized per python worker:
-# locally all B slices end up resident; on a cluster whose candidate stream is
-# bucketed by url_hash an executor only ever loads its buckets' shards. At
-# scale ``path`` is shared storage (the same volume the snapshot store uses).
+# The filter lives ONLY as one immutable file per shard (shard = url_hash mod
+# B, co-partitioned with the seen table's bucket(url_hash) layout at scale).
+# Each merge groups the delta by shard, and every shard's merge (read slice ->
+# OR delta -> atomic replace) runs INSIDE its executor task. The driver never
+# materializes a bitmap — it only bumps a version token. Membership (hit_udf)
+# lazy-loads exactly the shard slices a task's rows touch, memoized per
+# python worker: locally all B slices end up resident; on a cluster whose
+# candidate stream is bucketed by url_hash an executor only ever loads its
+# buckets' shards. At scale ``path`` is shared storage (the same volume the
+# snapshot store uses).
 
 
-_SHARD_CACHE: dict = {}  # (path, kind, shard) -> (version, ndarray)
+_SHARD_CACHE: dict = {}  # (path, shard) -> (version, ndarray)
 
 
-def _cached_shard(path: str, kind: str, s: int, ver: str, dtype):
+def _shard_file(path: str, s: int) -> str:
+    return os.path.join(path, f"shard-{s:04d}.bin")
+
+
+def _cached_shard(path: str, s: int, ver: str) -> np.ndarray:
     """Worker-side memoized read of one shard file. Python workers are
     reused across tasks/rounds, so entries are versioned: the driver bumps
     ``ver`` after every merge and stale entries are replaced on next use."""
-    import os
-
-    key = (path, kind, s)
-    ent = _SHARD_CACHE.get(key)
+    ent = _SHARD_CACHE.get((path, s))
     if ent is None or ent[0] != ver:
-        arr = np.fromfile(
-            os.path.join(path, f"{kind}-{s:04d}.bin"), dtype=dtype
-        )
-        _SHARD_CACHE[key] = (ver, arr)
-        return arr
+        ent = (ver, np.fromfile(_shard_file(path, s), dtype=np.uint8))
+        _SHARD_CACHE[(path, s)] = ent
     return ent[1]
 
 
 def _atomic_write(fname: str, data: bytes) -> None:
     """Write-then-rename so concurrent readers never see a torn file."""
-    import os
-    import uuid as _uuid
-
-    tmp = f"{fname}.tmp-{_uuid.uuid4().hex[:8]}"
+    tmp = f"{fname}.tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "wb") as f:
         f.write(data)
     os.replace(tmp, fname)
@@ -279,50 +170,45 @@ def shard_udf(shards: int):
 
 class BloomFileState:
     """Sharded seen-Bloom maintained EXECUTOR-SIDE (see section comment).
-
-    Same file layout, shard addressing, and k-fold bit scheme as
-    BloomState.save/load — a store written by either opens with the other.
-    save() is a no-op: every merge already left the filter durable."""
+    Shard s holds bits [0, n_bits / B) addressed by the k-fold scheme over
+    the hashes with url_hash mod B == s."""
 
     def __init__(self, path: str, n_bits: int, shards: int):
-        import uuid as _uuid
-
         assert n_bits % (shards * 8) == 0, "shards must byte-align the bitmap"
         self.path = path
         self.n_bits = n_bits
         self.shards = shards
         self.shard_bits = n_bits // shards
-        self._ver = _uuid.uuid4().hex[:12]
+        self._ver = uuid.uuid4().hex[:12]
 
     @classmethod
     def create(cls, path: str, n_bits: int, shards: int) -> "BloomFileState":
         """Initialize an EMPTY filter at path (wipes any previous one)."""
-        import os
         import shutil
 
         b = cls(path, n_bits, shards)
-        if os.path.isdir(path):
-            shutil.rmtree(path)
-        elif os.path.exists(path):
-            os.remove(path)
+        shutil.rmtree(path, ignore_errors=True)
         os.makedirs(path)
         zero = np.zeros(b.shard_bits // 8, dtype=np.uint8).tobytes()
         for s in range(shards):
-            _atomic_write(os.path.join(path, f"shard-{s:04d}.bin"), zero)
+            _atomic_write(_shard_file(path, s), zero)
         return b
 
     @classmethod
     def load(cls, path: str, n_bits: int, shards: int) -> "BloomFileState":
         """Open an existing filter — reads NOTHING on the driver (shard
         slices load lazily in the workers that touch them)."""
-        import os
-
         b = cls(path, n_bits, shards)
         nb = b.shard_bits // 8
         for s in range(shards):
-            f = os.path.join(path, f"shard-{s:04d}.bin")
-            assert os.path.getsize(f) == nb, f"bloom shard {s} size mismatch"
+            assert os.path.getsize(_shard_file(path, s)) == nb, \
+                f"bloom shard {s} size mismatch"
         return b
+
+    @staticmethod
+    def load_shard(path: str, s: int) -> np.ndarray:
+        """Read ONE shard's bitmap — the executor-side load unit at scale."""
+        return np.fromfile(_shard_file(path, s), dtype=np.uint8)
 
     def add_hashes_df(self, df: DataFrame) -> None:
         """Merge the url_hash column into the filter, one executor task per
@@ -330,21 +216,14 @@ class BloomFileState:
         exactly ONE writer, which reads the current slice, ORs the delta in
         two vectorized passes, and atomically replaces the file. Only
         (shard, n) counter rows ever reach the driver."""
-        import uuid as _uuid
-
         path, shard_bits = self.path, self.shard_bits
 
         def _merge(key, pdf):
-            import os
-
             s = int(key[0])
             hs = pdf["url_hash"].to_numpy(dtype=np.int64)
-            f = os.path.join(path, f"shard-{s:04d}.bin")
+            f = _shard_file(path, s)
             arr = np.fromfile(f, dtype=np.uint8)
-            idx = _indices(hs, shard_bits).ravel()
-            np.bitwise_or.at(
-                arr, idx >> 3, (1 << (idx & 7)).astype(np.uint8)
-            )
+            _set_bits(arr, hs, shard_bits)
             _atomic_write(f, arr.tobytes())
             return pd.DataFrame({"shard": [s], "n": [hs.size]})
 
@@ -355,7 +234,7 @@ class BloomFileState:
             .applyInPandas(_merge, "shard int, n long")
             .collect()
         )
-        self._ver = _uuid.uuid4().hex[:12]
+        self._ver = uuid.uuid4().hex[:12]
 
     def hit_udf(self):
         """pandas UDF: url_hash -> bool (True = maybe seen). Loads only the
@@ -370,35 +249,37 @@ class BloomFileState:
             sh = (hv.astype(np.uint64) % np.uint64(shards)).astype(np.int64)
             out = np.zeros(hv.size, dtype=bool)
             for s in np.unique(sh):
-                arr = _cached_shard(path, "shard", int(s), ver, np.uint8)
                 m = sh == s
-                idx = _indices(hv[m], shard_bits)
-                bits = (arr[idx >> 3] >> (idx & 7).astype(np.uint8)) & 1
-                out[m] = bits.all(axis=0)
+                out[m] = _all_bits(
+                    _cached_shard(path, int(s), ver), hv[m], shard_bits
+                )
             return pd.Series(out)
 
         return _hit
 
     def save(self, path: str) -> None:
         """No-op: every merge already replaced the shard files in place.
-        Kept for interface parity with the driver-resident states."""
-        assert path == self.path, "file-backed filter is bound to its path"
-
-    load_shard = staticmethod(BloomState.load_shard)  # same layout
+        Kept by name because perfbench's traced run wraps it (its
+        ``seen.bloom_save`` span, summed into ``seen.bloom_add_s``)."""
 
 
-def anti_join_with_bloom(candidates: DataFrame, seen: DataFrame,
-                         bloom) -> DataFrame:
-    """Exact anti-join with the incremental Bloom as prefilter (see
-    anti_join_seen for the exactness argument)."""
-    cand = candidates.withColumn("url_hash", F.xxhash64("url_norm"))
-    hit = bloom.hit_udf()
+def _prefiltered(cand: DataFrame, seen: DataFrame, hit) -> DataFrame:
+    """cand (with url_hash) minus seen: filter misses are definitely new;
+    only hits go through the exact anti-join."""
     cand = cand.withColumn("_maybe", hit(F.col("url_hash")))
     definitely_new = cand.filter(~F.col("_maybe"))
     confirmed_new = cand.filter(F.col("_maybe")).join(
         seen.select("url_norm"), "url_norm", "left_anti"
     )
     return definitely_new.unionByName(confirmed_new).drop("_maybe", "url_hash")
+
+
+def anti_join_with_bloom(candidates: DataFrame, seen: DataFrame,
+                         bloom: BloomFileState) -> DataFrame:
+    """Exact anti-join with the engine's filter as prefilter (see
+    anti_join_seen for the exactness argument)."""
+    cand = candidates.withColumn("url_hash", F.xxhash64("url_norm"))
+    return _prefiltered(cand, seen, bloom.hit_udf())
 
 
 def anti_join_seen(
@@ -411,7 +292,8 @@ def anti_join_seen(
     """Rows of ``candidates`` whose url_norm is NOT in ``seen`` (exact).
 
     candidates must carry url_norm; url_hash is derived here (xxhash64,
-    JVM-side) so both the Bloom and the join key stay consistent.
+    JVM-side) so both the Bloom and the join key stay consistent. With
+    use_bloom a one-shot filter is built from ``seen`` for this call.
     """
     cand = candidates.withColumn("url_hash", F.xxhash64("url_norm"))
     if not use_bloom:
@@ -423,11 +305,6 @@ def anti_join_seen(
     if n == 0:
         return cand.drop("url_hash")
     n_bits = max(1024, n * bloom_bits_per_key)
-    bitmap = build_bloom(seen, n_bits)
-    hit = bloom_hit_udf(bitmap, n_bits)
-    cand = cand.withColumn("_maybe", hit(F.col("url_hash")))
-    definitely_new = cand.filter(~F.col("_maybe"))
-    confirmed_new = cand.filter(F.col("_maybe")).join(
-        seen.select("url_norm"), "url_norm", "left_anti"
+    return _prefiltered(
+        cand, seen, bloom_hit_udf(build_bloom(seen, n_bits), n_bits)
     )
-    return definitely_new.unionByName(confirmed_new).drop("_maybe", "url_hash")

@@ -60,6 +60,13 @@ class _LazyArrowTypes(dict):
 _ARROW_TYPES = _LazyArrowTypes()
 
 
+def _write_synced(path: str, text: str) -> None:
+    with open(path, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+
+
 class SnapshotStore:
     def __init__(self, root: str):
         self.root = root
@@ -147,7 +154,10 @@ class SnapshotStore:
             self._pending[name] = {"mode": "overwrite", "dirs": []}
 
     def commit(self, meta: dict | None = None) -> int:
-        """Fold pending stages into a new manifest; atomic CURRENT swap."""
+        """Fold pending stages into a new manifest; atomic CURRENT swap.
+        Durable once it returns: the manifest and CURRENT.tmp are fsynced
+        before the rename and the directory after it, so a power loss
+        cannot leave CURRENT naming a manifest that never reached disk."""
         tables = {k: list(v) for k, v in self._tables.items()}
         for name, p in self._pending.items():
             if p["mode"] == "overwrite":
@@ -158,12 +168,16 @@ class SnapshotStore:
         self.meta = dict(meta or {})
         snap = {"version": self.version, "meta": self.meta, "tables": tables}
         name = f"v{self.version:08d}"
-        with open(os.path.join(self.snap_dir, name + ".json"), "w") as f:
-            json.dump(snap, f)
+        _write_synced(os.path.join(self.snap_dir, name + ".json"),
+                      json.dumps(snap))
         tmp = os.path.join(self.snap_dir, "CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(name)
+        _write_synced(tmp, name)
         os.replace(tmp, os.path.join(self.snap_dir, "CURRENT"))  # atomic
+        fd = os.open(self.snap_dir, os.O_RDONLY)
+        try:
+            os.fsync(fd)  # the rename itself
+        finally:
+            os.close(fd)
         self._tables = tables
         self._pending = {}
         return self.version
@@ -218,9 +232,10 @@ class SnapshotStore:
         expired manifests), and a round killed mid-write strands its
         staged dirs forever. Both are exactly what Iceberg's maintenance
         procedures exist for; the engine runs this on the same cadence as
-        table compaction. Only ``data/`` is scanned — seen-filter shard
-        files (``<root>/bloom*``, ``<root>/cuckoo``) live beside it and
-        are versioned by their own manifest-carried metadata.
+        table compaction. Only ``data/`` is scanned — the seen prefilter's
+        shard files (``<root>/bloom``) live beside it, rewritten in place;
+        a manifest vouches for them only through its meta's completeness
+        marker (engine.BLOOM_META).
         """
         keep_last = max(1, keep_last)
         snaps = sorted(

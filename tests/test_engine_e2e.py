@@ -4,11 +4,14 @@ Asserts on the tiny synthetic web:
   * identical crawl-order TRACE (round, ord, url, host, action)
   * identical final URL-seen set
   * byte-identical extracted text per crawled url
-  * Bloom prefilter on/off changes nothing (exactness)
+  * the seen prefilter's engagement changes nothing (exactness), across
+    resume on either side of it and across a recrawl pass
   * kill-after-round-k resume reproduces the identical full trace
 """
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -16,16 +19,22 @@ from conftest import load_inputs
 from oracle import run_oracle
 
 from sparkcrawl import schema as S
-from sparkcrawl.engine import CrawlConfig, CrawlEngine
+from sparkcrawl.engine import BLOOM_META, CrawlConfig, CrawlEngine
 from sparkcrawl.filters import FilterConfig
+from sparkcrawl.seen import BloomFileState
 from sparkcrawl.tables import SnapshotStore
 
+# Strictly between the tiny web's 6 seeds and its 60 seen URLs: rounds 1-2
+# (6 and 17 seen) run the exact anti-join alone, round 3 (31 seen) is the
+# first to build and use the prefilter. Pass 2 of a recrawl crosses it too.
+MID_CROSSOVER = 30
+ENGAGED = {"bits": CrawlConfig.bloom_bits, "shards": CrawlConfig.bloom_shards}
 
-def _run_engine(spark, fixtures, fixture_paths, store_dir, use_bloom=True,
+
+def _run_engine(spark, fixtures, fixture_paths, store_dir,
                 max_rounds=1000, resume_break=None, **cfg_kw):
     pages, meta, robots, seeds = load_inputs(spark, fixture_paths)
     cfg = CrawlConfig(
-        use_bloom=use_bloom,
         filters=FilterConfig(banned_hosts=fixtures["banned_hosts"]),
         **cfg_kw,
     )
@@ -62,22 +71,24 @@ def oracle_result(fixtures):
 
 
 def test_engine_matches_oracle(spark, fixtures, fixture_paths, tmp_path,
-                               oracle_result):
+                               oracle_result, monkeypatch):
+    """Default config. The tiny web stays far below the prefilter
+    crossover, so the crawl does no filter work at all: no merge, no
+    ``<store>/bloom``, no completeness marker. The frontier only ever
+    appends (merge-on-read), so its base is never rewritten."""
+    def no_filter_work(self, df):
+        raise AssertionError("filter merge below the crossover")
+
+    monkeypatch.setattr(BloomFileState, "add_hashes_df", no_filter_work)
     store = _run_engine(spark, fixtures, fixture_paths, str(tmp_path / "s"))
     trace, seen, crawled = _collect(spark, store)
     assert seen == oracle_result.seen
     assert trace == oracle_result.trace
     assert crawled == oracle_result.crawled  # byte-identical text
-
-
-def test_bloom_off_identical(spark, fixtures, fixture_paths, tmp_path,
-                             oracle_result):
-    store = _run_engine(
-        spark, fixtures, fixture_paths, str(tmp_path / "nb"), use_bloom=False
-    )
-    trace, seen, crawled = _collect(spark, store)
-    assert seen == oracle_result.seen
-    assert trace == oracle_result.trace
+    assert not os.path.exists(os.path.join(store.root, "bloom"))
+    assert BLOOM_META not in store.meta
+    # the delta frontier never rewrote its base: seed dir + one per round
+    assert store.n_dirs("frontier") == 1 + oracle_result.rounds
 
 
 def test_engine_matches_oracle_t1(spark, tmp_path):
@@ -106,43 +117,26 @@ def test_engine_matches_oracle_t1(spark, tmp_path):
     assert len(trace) > 800  # 12 rounds of t1 carry ~870 traced URLs
 
 
-def test_no_broadcast_hint_identical(spark, fixtures, fixture_paths,
-                                     tmp_path, oracle_result):
-    """broadcast_host_state=False (the 10^8-host regime: shuffled host
-    joins instead of forced broadcasts) changes nothing."""
-    pages, meta, robots, seeds = load_inputs(spark, fixture_paths)
-    cfg = CrawlConfig(
-        broadcast_host_state=False,
-        filters=FilterConfig(banned_hosts=fixtures["banned_hosts"]),
-    )
-    store = SnapshotStore(str(tmp_path / "nbc"))
-    CrawlEngine(spark, store, pages, meta, robots, cfg).run(seeds)
-    trace, seen, crawled = _collect(spark, store)
-    assert trace == oracle_result.trace
-    assert seen == oracle_result.seen
-    assert crawled == oracle_result.crawled
-
-
 def test_crossover_gates_identical(spark, fixtures, fixture_paths,
                                    tmp_path, oracle_result):
-    """Round-5 crossover knobs: forcing the big-scale plans at tiny scale
-    (broadcast_min_frontier=0 -> every round broadcasts host state;
-    bloom_filter_min_seen=0 -> the membership-UDF prefilter engages from
-    round 1) produces the identical trace / seen set / crawled corpus as
-    the defaults, which skip both below their thresholds. The two knobs
-    pick plans, never results."""
-    pages, meta, robots, seeds = load_inputs(spark, fixture_paths)
-    cfg = CrawlConfig(
-        broadcast_min_frontier=0,
-        bloom_filter_min_seen=0,
-        filters=FilterConfig(banned_hosts=fixtures["banned_hosts"]),
-    )
-    store = SnapshotStore(str(tmp_path / "xgate"))
-    CrawlEngine(spark, store, pages, meta, robots, cfg).run(seeds)
-    trace, seen, crawled = _collect(spark, store)
-    assert trace == oracle_result.trace
-    assert seen == oracle_result.seen
-    assert crawled == oracle_result.crawled
+    """The crossover knobs pick plans, never results, against the
+    defaults (which skip both on the tiny web): broadcast_min_frontier=0
+    broadcasts host state every round, and the prefilter engages mid-crawl
+    (MID_CROSSOVER). The run is killed once a round before engagement (the
+    fresh engine builds the filter from seen) and once a round after it
+    (the fresh engine opens the filter its marker vouches for); both
+    equal the oracle."""
+    for kill in (2, 4):
+        store = _run_engine(
+            spark, fixtures, fixture_paths, str(tmp_path / f"xgate{kill}"),
+            resume_break=kill, broadcast_min_frontier=0,
+            bloom_filter_min_seen=MID_CROSSOVER,
+        )
+        trace, seen, crawled = _collect(spark, store)
+        assert trace == oracle_result.trace
+        assert seen == oracle_result.seen
+        assert crawled == oracle_result.crawled
+        assert store.meta[BLOOM_META] == ENGAGED
 
 
 def test_resume_identical_ordering(spark, fixtures, fixture_paths, tmp_path,
@@ -357,21 +351,27 @@ def test_recrawl_304_matches_oracle(spark, fixtures, fixture_paths,
 
 def test_recrawl_resume_identical(spark, fixtures, fixture_paths, tmp_path):
     """Kill-and-resume INSIDE a recrawl pass reproduces the identical
-    trace (snapshot machinery is pass-agnostic)."""
+    trace (snapshot machinery is pass-agnostic). Both passes cross the
+    prefilter threshold: pass 1's filter must not survive the seen reset,
+    so pass 2 rebuilds its own at its first engaged round."""
     from gen_fixtures import mutate, write_parquet
     from oracle import run_oracle as _oracle
 
     store_dir = str(tmp_path / "rcr")
-    _run_engine(spark, fixtures, fixture_paths, store_dir)
+    _run_engine(spark, fixtures, fixture_paths, store_dir,
+                bloom_filter_min_seen=MID_CROSSOVER)
     fx2 = mutate(fixtures, seed=43)
     paths2 = write_parquet(fx2, str(tmp_path / "web2r"))
     pages2, meta2, robots2, seeds2 = load_inputs(spark, paths2)
     cfg = CrawlConfig(
-        filters=FilterConfig(banned_hosts=fixtures["banned_hosts"])
+        bloom_filter_min_seen=MID_CROSSOVER,
+        filters=FilterConfig(banned_hosts=fixtures["banned_hosts"]),
     )
     store = SnapshotStore(store_dir)
+    assert store.meta[BLOOM_META] == ENGAGED  # pass 1 engaged
     eng = CrawlEngine(spark, store, pages2, meta2, robots2, cfg)
     eng.init_recrawl(seeds2)
+    assert BLOOM_META not in store.meta
     eng.run(None, max_rounds=2)
     # kill; fresh store + engine resumes the pass
     store = SnapshotStore(store_dir)
@@ -384,7 +384,9 @@ def test_recrawl_resume_identical(spark, fixtures, fixture_paths, tmp_path):
     o2 = _oracle(fx2, doc_cache=cache)
     trace, seen, crawled = _collect(spark, store)
     assert trace == o2.trace
+    assert seen == o2.seen
     assert crawled == o2.crawled
+    assert store.meta[BLOOM_META] == ENGAGED  # pass 2 engaged
 
 
 def test_adaptive_shuffle_scopes_to_round(spark, fixture_paths, tmp_path):
@@ -414,21 +416,35 @@ def test_adaptive_shuffle_scopes_to_round(spark, fixture_paths, tmp_path):
 
 
 def test_default_seen_filter_file_backed(spark, fixtures, fixture_paths,
-                                         tmp_path):
-    """The engine's default (sharded) seen filter is the executor-side
-    file-backed state: nothing bitmap-shaped lives on the driver, and a
-    fresh engine resuming the store opens the same file-backed state."""
-    from sparkcrawl.seen import BloomFileState
-
+                                         tmp_path, monkeypatch):
+    """With the prefilter engaged from round 1 (threshold 0) the seen
+    filter is the executor-side file-backed state: one file per shard,
+    nothing bitmap-shaped on the driver, every round commits the
+    completeness marker, and a fresh engine resuming the store opens the
+    persisted shards instead of rebuilding them."""
     store_dir = str(tmp_path / "fb")
-    _run_engine(spark, fixtures, fixture_paths, store_dir, max_rounds=2)
+    store = _run_engine(spark, fixtures, fixture_paths, store_dir,
+                        max_rounds=2, bloom_filter_min_seen=0)
+    want = run_oracle(fixtures, max_rounds=2)
+    trace, seen, crawled = _collect(spark, store)
+    assert (trace, seen, crawled) == (want.trace, want.seen, want.crawled)
+    assert store.meta[BLOOM_META] == ENGAGED
+
+    def no_rebuild(self, df):
+        raise AssertionError("a vouched-for filter must not be rebuilt")
+
+    monkeypatch.setattr(BloomFileState, "add_hashes_df", no_rebuild)
     pages, meta, robots, _ = load_inputs(spark, fixture_paths)
     eng = CrawlEngine(
-        spark, SnapshotStore(store_dir), pages, meta, robots, CrawlConfig()
+        spark, SnapshotStore(store_dir), pages, meta, robots,
+        CrawlConfig(bloom_filter_min_seen=0),
     )
     b = eng.bloom()
     assert isinstance(b, BloomFileState)
     assert not hasattr(b, "bitmap")
+    assert sorted(os.listdir(b.path)) == [
+        f"shard-{s:04d}.bin" for s in range(ENGAGED["shards"])
+    ]
 
 
 def test_recrawl_three_pass_chain(spark, fixtures, fixture_paths, tmp_path):
@@ -490,8 +506,6 @@ def test_aggressive_maintenance_identical_and_bounded(
     default every-64) changes nothing observable — trace/seen/text equal the
     oracle — while the manifest count stays bounded by the retention window
     and a post-expiry resume still completes from the pruned store."""
-    import os
-
     root = str(tmp_path / "mx")
     store = _run_engine(
         spark, fixtures, fixture_paths, root,

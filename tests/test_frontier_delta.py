@@ -1,16 +1,9 @@
-"""Delta (merge-on-read) frontier vs full-rewrite frontier.
+"""Merge-on-read (delta) frontier: threshold compaction.
 
-CrawlConfig.frontier_mode="delta" appends admitted rows + selected-key
-tombstones instead of rewriting the whole frontier each round (engine
-_run_round front_tasks; Iceberg MERGE-with-position-deletes analogue).
-These tests pin the mode-independence contract:
-
-  * delta and rewrite modes produce identical trace/seen/crawled (both
-    equal to the oracle)
-  * threshold-triggered compaction (_compact_frontier) is content-neutral
-    and actually fires
-  * kill/resume works in delta mode, including a resume that switches
-    modes mid-crawl (tombstones honored, then folded in)
+A round appends admitted rows + selected-key tombstones instead of
+rewriting the whole frontier (engine._run_round; Iceberg
+MERGE-with-position-deletes analogue). Threshold-triggered compaction
+(_compact_frontier) must be content-neutral and must actually fire.
 """
 
 from __future__ import annotations
@@ -55,32 +48,13 @@ def _collect(spark, store):
     return trace, seen, crawled
 
 
-def test_delta_matches_rewrite_and_oracle(spark, fixtures, fixture_paths,
-                                          tmp_path, oracle_result):
-    results = {}
-    for mode in ("delta", "rewrite"):
-        eng, seeds = _mk_engine(
-            spark, fixtures, fixture_paths, str(tmp_path / mode),
-            frontier_mode=mode,
-        )
-        eng.run(seeds)
-        results[mode] = _collect(spark, eng.store)
-    assert results["delta"] == results["rewrite"]
-    trace, seen, crawled = results["delta"]
-    assert trace == oracle_result.trace
-    assert seen == oracle_result.seen
-    assert crawled == oracle_result.crawled
-    # delta mode never rewrote the base: one dir per admitting round + seed
-    assert eng.store.n_dirs("frontier") >= 1  # (eng is the rewrite one)
-
-
 def test_compaction_fires_and_is_content_neutral(spark, fixtures,
                                                  fixture_paths, tmp_path,
                                                  oracle_result):
     # floor=1 => compaction triggers as soon as tombstones >= live rows
     eng, seeds = _mk_engine(
         spark, fixtures, fixture_paths, str(tmp_path / "c"),
-        frontier_mode="delta", frontier_compact_min=1,
+        frontier_compact_min=1,
     )
     eng.init_frontier(seeds)
     eng.run_round(1)
@@ -104,28 +78,6 @@ def test_compaction_fires_and_is_content_neutral(spark, fixtures,
     # finish the crawl across more compactions: still oracle-identical
     eng.run(None)
     trace, seen, crawled = _collect(spark, eng.store)
-    assert trace == oracle_result.trace
-    assert seen == oracle_result.seen
-    assert crawled == oracle_result.crawled
-
-
-def test_delta_resume_and_mode_switch(spark, fixtures, fixture_paths,
-                                      tmp_path, oracle_result):
-    # run 2 rounds in delta mode, kill, resume in REWRITE mode: the resumed
-    # engine must honor the tombstones, fold them into its first overwrite,
-    # and still match the oracle end-to-end
-    store_dir = str(tmp_path / "sw")
-    eng, seeds = _mk_engine(
-        spark, fixtures, fixture_paths, store_dir, frontier_mode="delta"
-    )
-    eng.run(seeds, max_rounds=2)
-    assert eng.store.exists("frontier_consumed")
-    eng2, _ = _mk_engine(
-        spark, fixtures, fixture_paths, store_dir, frontier_mode="rewrite"
-    )
-    eng2.run(None)
-    assert not eng2.store.exists("frontier_consumed")  # folded + dropped
-    trace, seen, crawled = _collect(spark, eng2.store)
     assert trace == oracle_result.trace
     assert seen == oracle_result.seen
     assert crawled == oracle_result.crawled

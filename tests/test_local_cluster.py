@@ -44,12 +44,12 @@ pytestmark = pytest.mark.skipif(
 )
 
 
-def _submit_lc(primary_py, zip_path, cwd, *args, timeout=900):
+def _submit_lc(primary_py, zip_path, cwd, *args, timeout=900, env_add=None):
     """spark-submit under local-cluster: 2 executor JVMs x 2 cores,
     2048 MB each. Repo stripped from PYTHONPATH — driver AND both
     executors' Python workers must import sparkcrawl from the shipped
     zip, fetched over the executor file-server like a real cluster."""
-    env = dict(os.environ)
+    env = dict(os.environ, **(env_add or {}))
     env.pop("PYTHONPATH", None)
     env["PYSPARK_PYTHON"] = sys.executable
     env["PYSPARK_DRIVER_PYTHON"] = sys.executable
@@ -85,8 +85,11 @@ def test_local_cluster_crawl_kill_resume_bit_identical(
 ):
     """Partial crawl -> process death -> resume to quiescence, all under
     separate executor JVMs; the crawled corpus must be byte-identical to
-    the single-JVM in-process run. Exercises the executor-side seen-filter
-    shard merges (BloomFileState) under real process isolation."""
+    the single-JVM in-process run. With the prefilter engaged from round 1
+    (SPARKCRAWL_CONF threshold 0) this exercises the executor-side
+    seen-filter shard merges (BloomFileState) under real process
+    isolation, and the resumed leg opens the filter the first leg
+    committed."""
     pages, meta, robots, seeds = load_inputs(spark, fixture_paths)
     ref_store = SnapshotStore(str(tmp_path / "ref_store"))
     CrawlEngine(spark, ref_store, pages, meta, robots, CrawlConfig()).run(
@@ -104,15 +107,19 @@ def test_local_cluster_crawl_kill_resume_bit_identical(
     web = os.path.dirname(fixture_paths["pages"])
     store = str(tmp_path / "store")
 
+    engaged = {"SPARKCRAWL_CONF": '{"bloom_filter_min_seen": 0}'}
     res1 = _submit_lc(
         cli_py, zip_path, str(tmp_path),
         "--web", web, "--store", store, "--max-rounds", "2",
+        env_add=engaged,
     )
     assert res1["rounds"] == 2
+    assert os.path.isdir(os.path.join(store, "bloom"))
 
     res2 = _submit_lc(
         cli_py, zip_path, str(tmp_path),
         "--web", web, "--store", store, "--resume",
+        env_add=engaged,
     )
     assert res2["n_frontier"] == 0
     assert res2["n_crawled_total"] == len(expected)

@@ -3,7 +3,8 @@ be pruned by a KEY-ONLY semi-join and must never pass through an Exchange
 or Sort before the pruning (the no-wholesale-html-shuffle property that
 doubled loop throughput — see ARCHITECTURE.md §3). Two key-side shapes:
 broadcast (small rounds) and shuffled-hash against the cached web's
-hash(url_norm) partitioning (big rounds — CrawlConfig.fetch_join)."""
+hash(url_norm) partitioning (big rounds — CrawlConfig.bucketed_fetch_min;
+the plan tests reach the bucketed branch with that threshold at 0)."""
 
 from __future__ import annotations
 
@@ -59,7 +60,7 @@ def test_uncached_fetch_prunes_pages_before_any_exchange(
 def test_bucketed_fetch_reuses_cache_partitioning(
     spark, fixture_paths, tmp_path
 ):
-    """fetch_join=bucketed: the semi-prune plans as a ShuffledHashJoin that
+    """Bucketed fetch: the semi-prune plans as a ShuffledHashJoin that
     builds on the key side and reads the cached web IN PLACE — exactly one
     hash Exchange (the narrow key column) and no Sort of the web side."""
     pages, meta, robots_df, seeds = load_inputs(spark, fixture_paths)
@@ -67,10 +68,10 @@ def test_bucketed_fetch_reuses_cache_partitioning(
     # cache width == session shuffle width -> the co-partitioning gate holds
     eng = CrawlEngine(
         spark, store, pages, meta, robots_df,
-        CrawlConfig(cache_web=True, fetch_join="bucketed",
+        CrawlConfig(cache_web=True, bucketed_fetch_min=0,
                     cache_rows_per_partition=0),
     )
-    assert eng._use_bucketed_fetch(None)  # forced mode ignores the estimate
+    assert eng._use_bucketed_fetch(0)  # threshold 0: every known estimate
     sel = _sel(spark)
     sel_keys = sel.select("url_norm").hint("shuffle_hash")
     web_hits = eng._web.join(sel_keys, "url_norm", "left_semi")
@@ -92,16 +93,17 @@ def test_bucketed_fetch_reuses_cache_partitioning(
 
 
 def test_bucketed_outer_join_never_sorts(spark, fixture_paths, tmp_path):
-    """fetch_join=bucketed: the sel ⟕ web_hits OUTER join must plan as a
+    """Bucketed fetch: the sel ⟕ web_hits OUTER join must plan as a
     ShuffledHashJoin too — SortMergeJoin would Tungsten-sort the
     html-bearing pruned side (GBs at 10^6-URL rounds) every round."""
     pages, meta, robots_df, seeds = load_inputs(spark, fixture_paths)
     store = SnapshotStore(str(tmp_path / "store"))
     eng = CrawlEngine(
         spark, store, pages, meta, robots_df,
-        CrawlConfig(cache_web=True, fetch_join="bucketed",
+        CrawlConfig(cache_web=True, bucketed_fetch_min=0,
                     cache_rows_per_partition=0),
     )
+    assert eng._use_bucketed_fetch(0)
     sel = _sel(spark)
     sel_keys = sel.select("url_norm").hint("shuffle_hash")
     web_hits = eng._web.join(sel_keys, "url_norm", "left_semi").hint(
@@ -123,13 +125,13 @@ def test_bucketed_outer_join_never_sorts(spark, fixture_paths, tmp_path):
 
 
 def test_auto_fetch_gate(spark, fixture_paths, tmp_path):
-    """auto mode: bucketed only when frontier clears the threshold AND the
-    round width equals the cache width; broadcast otherwise."""
+    """Bucketed only when the frontier clears the threshold AND the round
+    width equals the cache width; broadcast otherwise."""
     pages, meta, robots_df, seeds = load_inputs(spark, fixture_paths)
     store = SnapshotStore(str(tmp_path / "store"))
     eng = CrawlEngine(
         spark, store, pages, meta, robots_df,
-        CrawlConfig(cache_web=True, fetch_join="auto",
+        CrawlConfig(cache_web=True,
                     bucketed_fetch_min=1000, cache_rows_per_partition=0),
     )
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -143,10 +145,10 @@ def test_auto_fetch_gate(spark, fixture_paths, tmp_path):
         assert not eng._use_bucketed_fetch(10_000)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    # no cache -> never bucketed, even when forced
+    # no cache -> never bucketed, even at threshold 0
     eng2 = CrawlEngine(
         spark, store, pages, meta, robots_df,
-        CrawlConfig(cache_web=False, fetch_join="bucketed"),
+        CrawlConfig(cache_web=False, bucketed_fetch_min=0),
     )
     assert not eng2._use_bucketed_fetch(10**9)
     eng._web.unpersist()
@@ -157,7 +159,7 @@ def test_cache_width_sized_to_web(spark, fixture_paths, tmp_path):
     """Default config sizes the web cache to the data, not the session:
     a tiny web caches into few partitions (downstream extraction stages
     stop paying dozens of near-empty python tasks per round), the clamp
-    ceiling is the session width, and auto mode then correctly refuses
+    ceiling is the session width, and the fetch gate then correctly refuses
     the bucketed path (cache width != round ceiling -> broadcast)."""
     pages, meta, robots_df, seeds = load_inputs(spark, fixture_paths)
     store = SnapshotStore(str(tmp_path / "store"))

@@ -130,8 +130,8 @@ def test_no_single_partition_windows_in_source():
 def test_no_topandas_in_engine_source():
     """No non-test sparkcrawl code may funnel a DataFrame through driver
     toPandas — all filter-state maintenance is executor-side
-    (BloomFileState/CuckooFileState per-shard merges); the round-3 verdict
-    retired the last driver-resident cuckoo hop and this pins it."""
+    (BloomFileState per-shard merges); the round-3 verdict retired the last
+    driver-resident filter hop and this pins it."""
     import pathlib
 
     src_dir = pathlib.Path(__file__).parent.parent / "sparkcrawl"

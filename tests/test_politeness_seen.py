@@ -79,12 +79,13 @@ def test_anti_join_bloom_exact(spark):
 
 
 def test_sharded_bloom_membership_and_roundtrip(spark, tmp_path):
-    """Sharded BloomState (shard = pmod(url_hash, B)): every added hash
-    hits; per-shard files persist/load independently; anti-join results
-    identical at B=1 vs B=4 (exactness never depends on the Bloom)."""
-    import numpy as np
+    """Sharded BloomFileState (shard = url_hash mod B): every added hash
+    hits; one file per shard, each loadable individually; a reopened
+    filter answers the same; anti-join results identical at B=1 vs B=4
+    (exactness never depends on the Bloom)."""
+    import os
 
-    from sparkcrawl.seen import BloomState, anti_join_with_bloom
+    from sparkcrawl.seen import BloomFileState, anti_join_with_bloom
 
     seen = spark.range(0, 6_000, 2).select(
         F.concat(F.lit("http://h:80/c"), F.col("id")).alias("url_norm"),
@@ -98,31 +99,26 @@ def test_sharded_bloom_membership_and_roundtrip(spark, tmp_path):
     )
     results = {}
     for shards in (1, 4):
-        b = BloomState(1 << 16, shards=shards)
+        path = str(tmp_path / f"bloom{shards}")
+        b = BloomFileState.create(path, 1 << 16, shards)
         b.add_hashes_df(seen)
-        # no false negatives: every seen hash must hit
-        hits = seen.select(
-            b.hit_udf()(F.col("url_hash")).alias("h")
-        ).collect()
-        assert all(r["h"] for r in hits)
+        assert sorted(os.listdir(path)) == [
+            f"shard-{s:04d}.bin" for s in range(shards)
+        ]
+        assert BloomFileState.load_shard(path, shards - 1).size == (
+            (1 << 16) // shards // 8
+        )
         results[shards] = set(
             r["url_norm"]
             for r in anti_join_with_bloom(cand, seen, b).collect()
         )
-        # save -> load roundtrip is bit-identical; B>1 writes one file
-        # per shard, loadable individually
-        path = str(tmp_path / f"bloom{shards}")
-        b.save(path)
-        b2 = BloomState.load(path, 1 << 16, shards)
-        assert np.array_equal(b.bitmap, b2.bitmap)
-        if shards > 1:
-            import os
-
-            assert sorted(os.listdir(path)) == [
-                f"shard-{s:04d}.bin" for s in range(shards)
-            ]
-            sl = BloomState.load_shard(path, 2)
-            assert np.array_equal(sl, b._shard_slice(2))
+        # reopened from its files: no false negatives, same answers
+        b2 = BloomFileState.load(path, 1 << 16, shards)
+        hits = seen.select(
+            b.hit_udf()(F.col("url_hash")).alias("h"),
+            b2.hit_udf()(F.col("url_hash")).alias("h2"),
+        ).collect()
+        assert all(r["h"] and r["h2"] for r in hits)
     assert results[1] == results[4]
     assert len(results[1]) == 3_000
 
@@ -144,14 +140,14 @@ def test_dense_seq_global_rank(spark):
 
 
 def test_bloom_file_state_executor_side(spark, tmp_path):
-    """BloomFileState (the engine's default): executor-side per-shard
-    merges produce BIT-IDENTICAL shard files to the driver-resident
-    BloomState for the same adds (the layouts are interchangeable), no
-    false negatives, incremental merges accumulate, save() is a no-op,
-    and the driver object holds no bitmap at all."""
+    """BloomFileState (the engine's prefilter): executor-side per-shard
+    merges produce BIT-IDENTICAL shard files to a bitmap computed in the
+    test from the same hashes (seen._indices per shard), incremental
+    merges accumulate, save() is a no-op, no false negatives, and the
+    driver object holds no bitmap at all."""
     import numpy as np
 
-    from sparkcrawl.seen import BloomFileState, BloomState
+    from sparkcrawl.seen import BloomFileState, _indices
 
     def mk(a, b):
         return spark.range(a, b).select(
@@ -163,21 +159,22 @@ def test_bloom_file_state_executor_side(spark, tmp_path):
 
     d1, d2 = mk(0, 3_000), mk(3_000, 5_000)
     shards, bits = 4, 1 << 16
-    b_mem = BloomState(bits, shards=shards)
-    b_mem.add_hashes_df(d1)
-    b_mem.add_hashes_df(d2)
-    mem_path = str(tmp_path / "mem")
-    b_mem.save(mem_path)
+    shard_bits = bits // shards
+    hashes = np.array(
+        [r["url_hash"] for r in mk(0, 5_000).collect()], dtype=np.int64
+    )
+    owner = (hashes.astype(np.uint64) % np.uint64(shards)).astype(np.int64)
 
     path = str(tmp_path / "file")
     bf = BloomFileState.create(path, bits, shards)
     bf.add_hashes_df(d1)
     bf.add_hashes_df(d2)  # incremental second merge
     for s in range(shards):
-        assert np.array_equal(
-            BloomFileState.load_shard(path, s),
-            BloomState.load_shard(mem_path, s),
-        ), f"shard {s} differs from driver-resident build"
+        want = np.zeros(shard_bits // 8, dtype=np.uint8)
+        for i in _indices(hashes[owner == s], shard_bits).ravel():
+            want[i >> 3] |= np.uint8(1 << (i & 7))
+        assert np.array_equal(BloomFileState.load_shard(path, s), want), \
+            f"shard {s} differs from the expected bitmap"
     assert not hasattr(bf, "bitmap")  # nothing driver-resident
     bf.save(path)  # no-op, already durable
 
@@ -189,6 +186,3 @@ def test_bloom_file_state_executor_side(spark, tmp_path):
         .collect()
     )
     assert all(r["h"] for r in hits)
-    # and the legacy loader opens the same files (cross-compat)
-    b_back = BloomState.load(path, bits, shards)
-    assert np.array_equal(b_back.bitmap, b_mem.bitmap)
